@@ -25,13 +25,20 @@ def branch(df: DataFrame, *predicates: Column) -> list[DataFrame]:
     the default branch: rows matching no predicate.  NULL predicate results
     count as non-matching (SQL three-valued logic folded to False).
     """
-    branches: list[DataFrame] = []
+    return [df if cond is None else df.filter(cond) for cond in branch_conditions(*predicates)]
+
+
+def branch_conditions(*predicates: Column) -> tuple[Column | None, ...]:
+    """The filter of each ``branch`` output, default branch last (None when
+    there are no predicates: the default branch is then the whole input).
+
+    Pure Column algebra, so a fixed routing can build its conditions once
+    and reuse them on every frame it splits."""
+    conds: list[Column | None] = []
     seen: Column | None = None
     for pred in predicates:
         pred = F.coalesce(pred, F.lit(False))
-        cond = pred if seen is None else pred & ~seen
-        branches.append(df.filter(cond))
+        conds.append(pred if seen is None else pred & ~seen)
         seen = pred if seen is None else seen | pred
-    default = df if seen is None else df.filter(~seen)
-    branches.append(default)
-    return branches
+    conds.append(None if seen is None else ~seen)
+    return tuple(conds)

@@ -15,13 +15,15 @@ whole topology is reproducible and idempotent under micro-batch replay.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logflow.functions.headers import header_value_str, put_header
 from logflow.functions.trace import b3_single_header, child_span_id, parse_b3
 from logflow.model import TOPIC_EVEN, TOPIC_ODD
-from logflow.operators.branch import branch
+from logflow.operators.branch import branch_conditions
 
 SERVICE = "numbers-app"
 
@@ -38,31 +40,42 @@ def enrich_trace(records: DataFrame, stage: str = "set") -> DataFrame:
     child span for the stage, writes the ``messageid`` baggage field
     (reference StreamsConfig.java:35: ``"messageid_" + v``), and re-encodes
     both into the outgoing headers so downstream stages / sinks see them.
+    Two projections: the context columns, then the columns derived from
+    them (the re-encoded headers carry the new span id).
     """
+    context, stamped = _enrich_columns(stage)
+    return records.withColumns(dict(context)).withColumns(dict(stamped))
+
+
+# The projections below are built on first use and shared by every call:
+# Columns are immutable and session-free, and each expression node is a
+# JVM round trip, so rebuilding them per query or per micro-batch is pure
+# planning cost.
+
+
+@functools.cache
+def _enrich_columns(stage: str) -> tuple[tuple[tuple[str, Column], ...], ...]:
     ctx = parse_b3(header_value_str("headers", "b3"))
-    with_ctx = records.withColumns(
-        {
-            "trace_id": ctx["trace_id"],
-            "parent_span_id": ctx["span_id"],
-            "sampled": ctx["sampled"],
-        }
+    context = (
+        ("trace_id", ctx["trace_id"]),
+        ("parent_span_id", ctx["span_id"]),
+        ("sampled", ctx["sampled"]),
     )
-    new_span = child_span_id(F.col("trace_id"), stage, F.col("offset"))
+    span_id = child_span_id(F.col("trace_id"), stage, F.col("offset"))
     messageid = F.concat(F.lit("messageid_"), F.col("value").cast("string"))
-    return (
-        with_ctx.withColumn("span_id", new_span)
-        .withColumn("baggage", F.create_map(F.lit("messageid"), messageid))
-        .withColumn(
+    stamped = (
+        ("span_id", span_id),
+        ("baggage", F.create_map(F.lit("messageid"), messageid)),
+        (
             "headers",
             put_header(
-                put_header(
-                    "headers", "b3", b3_single_header(F.col("trace_id"), F.col("span_id"))
-                ),
+                put_header("headers", "b3", b3_single_header(F.col("trace_id"), span_id)),
                 "messageid",
                 messageid,
             ),
-        )
+        ),
     )
+    return context, stamped
 
 
 def route_even_odd(enriched: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -73,11 +86,17 @@ def route_even_odd(enriched: DataFrame) -> tuple[DataFrame, DataFrame]:
     ride along untouched, matching the reference's propagation guarantee
     (README.adoc:119).
     """
-    even, odd = branch(enriched, F.pmod(F.col("value"), F.lit(2)) == 0)
+    even, odd, even_topic, odd_topic = _route_columns()
     return (
-        even.withColumn("topic", F.lit(TOPIC_EVEN)),
-        odd.withColumn("topic", F.lit(TOPIC_ODD)),
+        enriched.filter(even).withColumn("topic", even_topic),
+        enriched.filter(odd).withColumn("topic", odd_topic),
     )
+
+
+@functools.cache
+def _route_columns() -> tuple[Column, Column, Column, Column]:
+    even, odd = branch_conditions(F.pmod(F.col("value"), F.lit(2)) == 0)
+    return even, odd, F.lit(TOPIC_EVEN), F.lit(TOPIC_ODD)
 
 
 def spans_from_records(records: DataFrame) -> DataFrame:
@@ -92,8 +111,14 @@ def spans_from_records(records: DataFrame) -> DataFrame:
     no self-union) — at 100 TB this matters: the 3× row expansion happens
     pipelined inside the scan stage, no shuffle.
     """
+    base, chain, out = _span_columns()
+    return records.select(*base).select(*chain).select(*out)
+
+
+@functools.cache
+def _span_columns() -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[Column | str, ...]]:
     ctx = parse_b3(header_value_str("headers", "b3"))
-    base = records.select(
+    base = (
         F.col("offset"),
         F.col("value"),
         F.col("ts"),
@@ -133,10 +158,8 @@ def spans_from_records(records: DataFrame) -> DataFrame:
         )
 
     stages = F.array(*[stage_struct(i, n) for i, n in STAGES])
-    return base.select(
-        F.col("trace_id"),
-        F.inline(stages),
-    ).select(
+    chain = (F.col("trace_id"), F.inline(stages))
+    out = (
         "trace_id",
         "span_id",
         "parent_id",
@@ -147,6 +170,7 @@ def spans_from_records(records: DataFrame) -> DataFrame:
         "duration_us",
         "kafka_topic",
     )
+    return base, chain, out
 
 
 def rewrite_remote_service(spans: DataFrame) -> DataFrame:
@@ -155,13 +179,15 @@ def rewrite_remote_service(spans: DataFrame) -> DataFrame:
     Spans tagged with ``kafka.topic`` get ``remote_service → remote_service/topic``
     so the dependency graph disambiguates per-topic edges.
     """
-    return spans.withColumn(
-        "remote_service",
-        F.when(
-            F.col("kafka_topic").isNotNull() & F.col("remote_service").isNotNull(),
-            F.concat_ws("/", F.col("remote_service"), F.col("kafka_topic")),
-        ).otherwise(F.col("remote_service")),
-    )
+    return spans.withColumn("remote_service", _remote_service_column())
+
+
+@functools.cache
+def _remote_service_column() -> Column:
+    return F.when(
+        F.col("kafka_topic").isNotNull() & F.col("remote_service").isNotNull(),
+        F.concat_ws("/", F.col("remote_service"), F.col("kafka_topic")),
+    ).otherwise(F.col("remote_service"))
 
 
 def logs_from_records(records: DataFrame) -> DataFrame:
@@ -173,7 +199,12 @@ def logs_from_records(records: DataFrame) -> DataFrame:
     README.adoc:112-119, ``INFO [app,,,]``).  Even records instead get a
     traced `even`-stage row (reference StreamsConfig.java:42-45).
     """
-    enriched = enrich_trace(records)
+    rows, out = _log_columns()
+    return enrich_trace(records).select(*rows).select(*out)
+
+
+@functools.cache
+def _log_columns() -> tuple[tuple[Column, ...], tuple[Column | str, ...]]:
     even_pred = F.pmod(F.col("value"), F.lit(2)) == 0
     msg_val = F.col("value").cast("string")
 
@@ -202,7 +233,7 @@ def logs_from_records(records: DataFrame) -> DataFrame:
         F.lit(None).cast("map<string,string>").alias("baggage"),
     )
     rows = F.array(set_row, F.when(even_pred, even_row).otherwise(odd_row))
-    return enriched.select(F.col("ts"), F.inline(rows)).select(
+    out = (
         "ts",
         F.lit("INFO").alias("level"),
         F.lit(SERVICE).alias("app"),
@@ -213,3 +244,4 @@ def logs_from_records(records: DataFrame) -> DataFrame:
         "message",
         "baggage",
     )
+    return (F.col("ts"), F.inline(rows)), out

@@ -33,12 +33,17 @@ nodes) salts the contribution aggregation exactly like join_salted_skew.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import TypeVar
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from logflow.operators.cache import track
 from logflow.queries import register
 from logflow.sources.tables import load_table
+
+T = TypeVar("T")
 
 _SCALE = 1_000_000_000_000  # 1e12 fixed-point rank scale
 _D_NUM, _D_DEN = 85, 100  # damping 0.85 as a ratio
@@ -63,6 +68,18 @@ def _size_parts(n_rows: int) -> int:
     return max(1, min(4096, int(n_rows) // _ROWS_PER_TASK + 1))
 
 
+def _thread_target(spark: SparkSession, fn: Callable[[], T]) -> Callable[[], T]:
+    """``fn`` as a pool-thread target that inherits the caller's local
+    properties and job tags. Only py4j's pinned-thread mode
+    (PYSPARK_PIN_THREAD, on by default) has a wrapper for that; with it
+    off, ``inheritable_thread_target(spark)`` returns the session itself,
+    and ``fn`` runs as it is (threads then share the JVM's properties)."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
+
+
 def _copurchase_edges(
     spark: SparkSession,
     sf_dir: str,
@@ -71,7 +88,7 @@ def _copurchase_edges(
     w_min: int = 1,
     weighted: bool = False,
     return_ppo: bool = False,
-) -> DataFrame:
+) -> DataFrame | tuple[DataFrame, DataFrame]:
     """The shared co-purchase edge build (single source of the edge
     contract for PageRank / triangles / recursive walks): ONE shuffle of
     lineitem (groupBy order; collect_set dedupes parts within the order)
@@ -2498,18 +2515,18 @@ def graph_louvain_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are deterministic — concurrency only changes job scheduling.
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-
     with ThreadPoolExecutor(max_workers=2) as pool:
         fm = pool.submit(
-            inheritable_thread_target(spark)(
+            _thread_target(
+                spark,
                 lambda: edges.agg(
                     F.count(F.lit(1)).cast("long").alias("m")
                 ).localCheckpoint(eager=True)
             )
         )
         fdeg = pool.submit(
-            inheritable_thread_target(spark)(
+            _thread_target(
+                spark,
                 lambda: bid.groupBy(F.col("u").alias("id"))
                 .agg(F.count(F.lit(1)).cast("long").alias("d"))
                 .coalesce(1)
@@ -2599,12 +2616,14 @@ def graph_louvain_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # qb and qa are independent of each other — same §2.6 overlap
     with ThreadPoolExecutor(max_workers=2) as pool:
         fqb = pool.submit(
-            inheritable_thread_target(spark)(
+            _thread_target(
+                spark,
                 lambda: _q4m2(labels, tot).localCheckpoint(eager=True)
             )
         )
         fqa = pool.submit(
-            inheritable_thread_target(spark)(
+            _thread_target(
+                spark,
                 lambda: _q4m2(after.select("id", "lab"), tot2).localCheckpoint(
                     eager=True
                 )

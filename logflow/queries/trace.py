@@ -9,7 +9,9 @@ bit-identical across both engines (md5, integer %, FLOOR, interval math).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logflow.functions.headers import header_value_str
@@ -83,22 +85,32 @@ spans AS (
 """
 
 
+# Each query's own Columns (filters, projections, aggregates) are built on
+# first use by a functools.cache builder and shared by every later build,
+# like the operator projections they sit on: a Column is immutable and
+# session-free, and every expression node costs a JVM round trip.
+
+
 def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return records_from_events(load_table(spark, "events", sf_dir))
 
 
 def _route(spark: SparkSession, sf_dir: str, even: bool) -> DataFrame:
     even_df, odd_df = route_even_odd(enrich_trace(_records(spark, sf_dir)))
-    df = even_df if even else odd_df
-    return df.select(
+    return (even_df if even else odd_df).select(
         "key",
         "value",
         "topic",
         "trace_id",
         "parent_span_id",
         "span_id",
-        F.col("baggage")["messageid"].alias("messageid"),
+        _messageid_column(),
     )
+
+
+@functools.cache
+def _messageid_column() -> Column:
+    return F.col("baggage")["messageid"].alias("messageid")
 
 
 def _route_oracle(parity: str) -> str:
@@ -147,13 +159,14 @@ GROUP BY 1
 )
 def trace_branch_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     even, odd = route_even_odd(enrich_trace(_records(spark, sf_dir)))
+    return even.unionByName(odd).groupBy("topic").agg(*_branch_law_aggs())
+
+
+@functools.cache
+def _branch_law_aggs() -> tuple[Column, ...]:
     return (
-        even.unionByName(odd)
-        .groupBy("topic")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").cast("long").alias("sum_value"),
-        )
+        F.count(F.lit(1)).alias("n"),
+        F.sum("value").cast("long").alias("sum_value"),
     )
 
 
@@ -172,12 +185,17 @@ WHERE name = 'send'
 )
 def trace_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = spans_from_records(_records(spark, sf_dir))
-    return spans.filter(
+    return spans.filter(_search_filter()).select("trace_id", "span_id", "ts", "duration_us")
+
+
+@functools.cache
+def _search_filter() -> Column:
+    return (
         (F.col("name") == "send")
         & (F.col("kafka_topic") == "even-numbers")
         & F.col("duration_us").between(1000, 4000)
         & F.col("ts").between("2024-01-05 00:00:00", "2024-01-20 00:00:00")
-    ).select("trace_id", "span_id", "ts", "duration_us")
+    )
 
 
 @register(
@@ -197,20 +215,23 @@ LEFT JOIN spans p
 )
 def trace_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = spans_from_records(_records(spark, sf_dir))
-    child, parent = spans.alias("c"), spans.alias("p")
+    on, out = _tree_edge_columns()
     # Self-join co-partitioned on trace_id: both sides shuffle on the same
     # key, so at scale this is one exchange each and a local join.
-    return child.join(
-        parent,
-        (F.col("c.trace_id") == F.col("p.trace_id")) & (F.col("c.parent_id") == F.col("p.span_id")),
-        "left",
-    ).select(
+    return spans.alias("c").join(spans.alias("p"), on, "left").select(*out)
+
+
+@functools.cache
+def _tree_edge_columns() -> tuple[Column, tuple[Column, ...]]:
+    on = (F.col("c.trace_id") == F.col("p.trace_id")) & (F.col("c.parent_id") == F.col("p.span_id"))
+    out = (
         F.col("c.trace_id").alias("trace_id"),
         F.col("c.span_id").alias("span_id"),
         F.col("c.name").alias("name"),
         F.col("p.name").alias("parent_name"),
         F.timestamp_diff("MICROSECOND", F.col("p.ts"), F.col("c.ts")).alias("gap_us"),
     )
+    return on, out
 
 
 @register(
@@ -229,7 +250,12 @@ GROUP BY trace_id
 )
 def trace_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = spans_from_records(_records(spark, sf_dir))
-    return spans.groupBy("trace_id").agg(
+    return spans.groupBy("trace_id").agg(*_summary_aggs())
+
+
+@functools.cache
+def _summary_aggs() -> tuple[Column, ...]:
+    return (
         F.count(F.lit(1)).alias("n_spans"),
         F.sum("duration_us").cast("long").alias("total_duration_us"),
         F.min("ts").alias("started_at"),
@@ -253,10 +279,16 @@ GROUP BY 1, 2
 )
 def trace_dependency_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = rewrite_remote_service(spans_from_records(_records(spark, sf_dir)))
+    keep, keys, count = _dependency_columns()
+    return spans.filter(keep).groupBy(*keys).agg(count)
+
+
+@functools.cache
+def _dependency_columns() -> tuple[Column, tuple[Column, ...], Column]:
     return (
-        spans.filter(F.col("kafka_topic").isNotNull())
-        .groupBy("service", F.col("remote_service").alias("remote"))
-        .agg(F.count(F.lit(1)).alias("call_count"))
+        F.col("kafka_topic").isNotNull(),
+        (F.col("service"), F.col("remote_service").alias("remote")),
+        F.count(F.lit(1)).alias("call_count"),
     )
 
 
@@ -281,11 +313,15 @@ GROUP BY 1, 2
     doc="T3/T4: correlated vs uncorrelated log rows (README.adoc:93-119)",
 )
 def trace_log_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    logs = logs_from_records(_records(spark, sf_dir))
-    return logs.groupBy("logger", F.col("trace_id").isNotNull().alias("traced")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("trace_id").alias("n_traces"),
-    )
+    keys, aggs = _log_summary_columns()
+    return logs_from_records(_records(spark, sf_dir)).groupBy(*keys).agg(*aggs)
+
+
+@functools.cache
+def _log_summary_columns() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    keys = (F.col("logger"), F.col("trace_id").isNotNull().alias("traced"))
+    aggs = (F.count(F.lit(1)).alias("n"), F.countDistinct("trace_id").alias("n_traces"))
+    return keys, aggs
 
 
 @register(
@@ -303,8 +339,13 @@ FROM records WHERE value % 2 = 0
 )
 def trace_baggage_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     even, _ = route_even_odd(enrich_trace(_records(spark, sf_dir)))
+    return even.select(*_baggage_aggs())
+
+
+@functools.cache
+def _baggage_aggs() -> tuple[Column, ...]:
     expected = F.concat(F.lit("messageid_"), F.col("value").cast("string"))
-    return even.select(
+    return (
         F.count(F.lit(1)).alias("n_even"),
         F.sum(
             F.when(header_value_str("headers", "messageid") == expected, 1).otherwise(0)
@@ -338,34 +379,41 @@ GROUP BY value % 2
     "for a live-broker integration test.",
 )
 def source_custom_wirelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from logflow.functions.codec import int_be_decode
-    from logflow.functions.trace import parse_b3
     from logflow.sources.derived import derived_cache
-    from logflow.sources.wirelog import register_wirelog, write_wirelog
+    from logflow.sources.wirelog import WIRELOG_SCHEMA, register_wirelog, write_wirelog
     from logflow.streaming.sinks import kafka_wire_frame
 
-    ev = load_table(spark, "events", sf_dir, parallelize=False)
-    enriched = enrich_trace(records_from_events(ev))
-    base = derived_cache(
-        sf_dir,
-        "wirelog",
-        ["events"],
-        lambda d: write_wirelog(kafka_wire_frame(enriched), d),
-    )
+    def land(d: str) -> None:
+        ev = load_table(spark, "events", sf_dir, parallelize=False)
+        write_wirelog(kafka_wire_frame(enrich_trace(records_from_events(ev))), d)
+
+    base = derived_cache(sf_dir, "wirelog", ["events"], land)
     register_wirelog(spark)
-    raw = spark.read.format("wirelog").option("path", base).load()
+    # The declared schema spares load() a Python planner worker whose only
+    # job would be to ask WirelogDataSource.schema() for the same string.
+    raw = spark.read.format("wirelog").schema(WIRELOG_SCHEMA).option("path", base).load()
+    decode, bucket, aggs = _wirelog_columns()
+    return raw.select(*decode).groupBy(bucket).agg(*aggs)
+
+
+@functools.cache
+def _wirelog_columns() -> tuple[tuple[Column, ...], Column, tuple[Column, ...]]:
+    from logflow.functions.codec import int_be_decode
+    from logflow.functions.trace import parse_b3
+
     ctx = parse_b3(header_value_str("headers", "b3"))
-    decoded = raw.select(
+    decode = (
         F.decode(F.col("key"), "UTF-8").alias("key"),
         int_be_decode(F.col("value")).cast("long").alias("value"),
         ctx["trace_id"].alias("trace_id"),
     )
-    return decoded.groupBy((F.col("value") % 2).alias("bucket")).agg(
+    aggs = (
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("value").cast("long").alias("sum_value"),
         F.min("trace_id").alias("min_trace"),
         F.max("key").alias("max_key"),
     )
+    return decode, (F.col("value") % 2).alias("bucket"), aggs
 
 
 @register(
@@ -397,24 +445,32 @@ GROUP BY lane
     "row must not also appear in 'low'/'mid').",
 )
 def branch_multiway_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from logflow.operators.branch import branch
-
     recs = _records(spark, sf_dir).select("value")
-    lanes = branch(
-        recs,
+    conds, lanes, aggs = _value_band_columns()
+    tagged = [recs.filter(cond).withColumn("lane", lane) for cond, lane in zip(conds, lanes)]
+    allrows = tagged[0]
+    for t in tagged[1:]:
+        allrows = allrows.unionByName(t)
+    return allrows.groupBy("lane").agg(*aggs)
+
+
+@functools.cache
+def _value_band_columns() -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[Column, ...]]:
+    """The branch() filters of the three bands and the default lane, their
+    lane labels, and the aggregates."""
+    from logflow.operators.branch import branch_conditions
+
+    conds = branch_conditions(
         F.col("value") < 20,
         F.col("value") < 100,
         (F.col("value") % 2) == 0,
     )
-    labels = ["low", "mid", "high-even", "default"]
-    tagged = [df.withColumn("lane", F.lit(name)) for df, name in zip(lanes, labels)]
-    allrows = tagged[0]
-    for t in tagged[1:]:
-        allrows = allrows.unionByName(t)
-    return allrows.groupBy("lane").agg(
+    lanes = tuple(F.lit(name) for name in ("low", "mid", "high-even", "default"))
+    aggs = (
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("value").cast("long").alias("sum_value"),
     )
+    return conds, lanes, aggs
 
 
 # --------------------------------------------------------------------------
@@ -457,9 +513,8 @@ def source_statestore_depgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logflow.sources.derived import derived_cache
     from logflow.streaming.stateful import streaming_dependency_graph
 
-    ev = load_table(spark, "events", sf_dir, parallelize=False)
-
     def writer(d: str) -> None:
+        ev = load_table(spark, "events", sf_dir, parallelize=False)
         src = os.path.join(d, "src")
         ckpt = os.path.join(d, "ckpt")
         ev.write.mode("overwrite").parquet(src)
@@ -500,8 +555,13 @@ def source_statestore_depgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         boot.awaitTermination(60)
     st = spark.read.format("statestore").load(os.path.join(base, "ckpt"))
-    return st.select(
+    return st.select(*_state_edge_columns()).orderBy("service", "remote")
+
+
+@functools.cache
+def _state_edge_columns() -> tuple[Column, ...]:
+    return (
         F.col("key.service").alias("service"),
         F.col("key.remote").alias("remote"),
         F.col("value.groupState.n").cast("long").alias("call_count"),
-    ).orderBy("service", "remote")
+    )

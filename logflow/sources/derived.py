@@ -30,7 +30,7 @@ import shutil
 import tempfile
 from collections.abc import Callable
 
-from logflow.sources.tables import DEFAULT_SF_DIR
+from logflow.sources.tables import DEFAULT_SF_DIR, file_stamp
 
 #: marker file holding the source fingerprint; underscore prefix keeps it
 #: invisible to Spark's file listing (and to the wirelog reader's suffix
@@ -39,25 +39,12 @@ _MARKER = "_FINGERPRINT"
 
 
 def source_fingerprint(sf_dir: str, tables: list[str]) -> str:
-    """Hash of (table, file, size, mtime_ns) over the source parquet files."""
+    """Hash of (table, file, size, mtime_ns) over the source parquet files
+    (the file stamps ``load_table`` keys its schema memo on)."""
     h = hashlib.sha256()
     for t in sorted(tables):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isfile(path):
-            files = [path]
-        elif os.path.isdir(path):
-            files = sorted(
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if not f.startswith((".", "_"))
-            )
-        else:
-            files = []
-        for f in files:
-            st = os.stat(f)
-            h.update(
-                f"{t}|{os.path.basename(f)}|{st.st_size}|{st.st_mtime_ns}\n".encode()
-            )
+        for name, size, mtime_ns in file_stamp(os.path.join(sf_dir, f"{t}.parquet")):
+            h.update(f"{t}|{name}|{size}|{mtime_ns}\n".encode())
     return h.hexdigest()
 
 

@@ -14,8 +14,9 @@ oracle can reproduce it bit-for-bit (see logflow/queries/trace.py).
 from __future__ import annotations
 
 import datetime
+import functools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logflow.functions.headers import put_header
@@ -31,10 +32,18 @@ def records_from_events(events: DataFrame) -> DataFrame:
     engine's oracle, DuckDB, rounds on double→int casts while Spark
     truncates; FLOOR is identical in both.
     """
+    return events.select(*_record_columns())
+
+
+@functools.cache
+def _record_columns() -> tuple[Column, ...]:
+    """The record projection, built on first use and shared by every call:
+    Columns are immutable and session-free, and each expression node is a
+    JVM round trip, so rebuilding them per query is pure planning cost."""
     value_int = F.floor(F.col("value")).cast("long")
     trace_id = trace_id_for("event_id")
     root_span = span_id_for("event_id")
-    return events.select(
+    return (
         F.concat(F.lit("user-"), F.col("user_id").cast("string")).alias("key"),
         value_int.alias("value"),
         F.lit(TOPIC_INPUT).alias("topic"),

@@ -13,6 +13,8 @@ the writers are thin wrappers over ``format("kafka")``.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -24,7 +26,7 @@ from logflow.functions.trace import b3_single_header
 def kafka_wire_frame(
     records: DataFrame,
     topic: str | None = None,
-    sampled: Column | bool = True,
+    sampled: str | bool = True,
 ) -> DataFrame:
     """Record frame → Kafka producer frame (the serde layer, S2 inverted).
 
@@ -33,17 +35,24 @@ def kafka_wire_frame(
     array with ``b3`` overwritten from the CURRENT trace context (the
     stage's span id, not the consumed parent's — reference behavior per
     StreamsConfigTest.java:64-66) and baggage kept as its own header.
+    ``sampled`` is the b3 sampling flag: a constant, or the name of a
+    boolean column (``enrich_trace``'s ``sampled``) to forward per record.
     """
-    b3 = b3_single_header("trace_id", "span_id", sampled)
-    headers = put_header("headers", "b3", b3)
-    out = records.select(
+    return records.select(*_wire_columns(topic, sampled))
+
+
+@functools.cache
+def _wire_columns(topic: str | None, sampled: str | bool) -> tuple[Column, ...]:
+    """The wire projection per (topic, sampled), built on first use and
+    shared by every call (Columns are immutable and session-free)."""
+    flag = F.col(sampled) if isinstance(sampled, str) else sampled
+    b3 = b3_single_header("trace_id", "span_id", flag)
+    cols = (
         F.encode(F.col("key"), "UTF-8").alias("key"),
         int_be_encode(F.col("value").cast("int")).alias("value"),
-        headers.alias("headers"),
+        put_header("headers", "b3", b3).alias("headers"),
     )
-    if topic is not None:
-        out = out.withColumn("topic", F.lit(topic))
-    return out
+    return cols if topic is None else (*cols, F.lit(topic).alias("topic"))
 
 
 def to_topic(

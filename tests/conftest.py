@@ -38,3 +38,20 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_TEST
+
+
+@pytest.fixture(scope="session")
+def last_job_id(spark):
+    """Callable returning the id of the last Spark job started so far (-1
+    before the first): the difference of two calls is the number of jobs
+    started in between. Drains the listener bus first, because the status
+    tracker learns of jobs through it."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+
+    def last() -> int:
+        bus.waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    return last

@@ -723,3 +723,24 @@ def test_graph_adamic_adar_semantics(spark, sf_dir):
             for z in common
         )
         assert r.aa_fp == want, (r.part_a, r.part_b, r.aa_fp, want)
+
+
+def test_thread_target_without_pinned_threads(spark, monkeypatch):
+    """graph_louvain_refine's pool targets: with py4j's pinned-thread mode
+    off, ``inheritable_thread_target(spark)`` returns the session itself,
+    so the target must be the plain callable, not ``spark(fn)``."""
+    from pyspark import SparkContext
+
+    from logflow.queries.graph import _thread_target
+
+    def fn():
+        return 42
+
+    wrapped = _thread_target(spark, fn)
+    assert wrapped is not fn and wrapped() == 42
+    # The mode is fixed when the gateway starts: PYSPARK_PIN_THREAD=false
+    # starts a plain JavaGateway instead of a py4j ClientServer.
+    monkeypatch.setenv("PYSPARK_PIN_THREAD", "false")
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    plain = _thread_target(spark, fn)
+    assert plain is fn and plain() == 42

@@ -149,3 +149,57 @@ def test_wire_frame_bytes_matches_python_reference_framing(spark):
         _write_frame(buf, key, value, headers or [])
         want.append(buf.getvalue())
     assert got == want
+
+
+def _trace_plane():
+    """The trace-plane registry entries: every query of logflow/queries/trace.py."""
+    import logflow.queries.trace as trace_mod
+    from logflow.queries import load_all
+
+    return {n: q for n, q in load_all().items() if q.fn.__module__ == trace_mod.__name__}
+
+
+def test_trace_plane_build_starts_no_job(spark, sf_dir, last_job_id):
+    """Building a query (``q.fn``, no action) plans it and nothing more: no
+    schema-inference job, no data-source planning job. The first build of
+    each may land its derived dataset, so it is left out."""
+    queries = _trace_plane()
+    assert len(queries) == 12
+    for q in queries.values():
+        q.fn(spark, sf_dir)
+    for name, q in queries.items():
+        before = last_job_id()
+        q.fn(spark, sf_dir)
+        assert last_job_id() == before, f"{name} started a job while building"
+
+
+def test_trace_plane_concurrent_first_build(spark, duck, sf_dir, monkeypatch):
+    """Every trace query built at once, one thread each (more threads than
+    cores, with a short switch interval), with the shared Column builders
+    and the schema memo starting empty, still matches its DuckDB oracle."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import logflow.operators.topology as topology
+    import logflow.queries.trace as trace_mod
+    import logflow.sources.records as records
+    import logflow.sources.tables as tables
+    import logflow.streaming.sinks as sinks
+    from tests.oracle import compare_frames
+
+    for mod in (records, topology, sinks, trace_mod):
+        for obj in vars(mod).values():
+            if hasattr(obj, "cache_clear"):
+                obj.cache_clear()
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    queries = _trace_plane()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(queries)) as pool:
+            futures = {n: pool.submit(q.fn, spark, sf_dir) for n, q in queries.items()}
+            built = {n: f.result(timeout=600) for n, f in futures.items()}
+    finally:
+        sys.setswitchinterval(interval)
+    for name, df in built.items():
+        compare_frames(df.toPandas(), duck.execute(queries[name].oracle).fetchdf(), name)

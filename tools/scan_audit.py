@@ -80,14 +80,29 @@ def main() -> int:
             ):
                 nid, body = m.group(1), m.group(2)
                 lm = re.search(r"Location: [^\[\n]*\[([^\]]+)\]", body)
-                loc_by_id[nid] = lm.group(1) if lm else f"unknown-node-{nid}"
+                if lm:
+                    loc_by_id[nid] = lm.group(1)
+            # A node id without a parsed Location keeps a key of its own,
+            # so repeats of one table among such ids are never summed:
+            # count them, so parser drift shows instead of under-reporting.
+            unparsed = sorted(set(tree_ids) - set(loc_by_id), key=int)
+            if unparsed:
+                print(
+                    f"WARN {name}: no parsed Location for scan node(s) "
+                    f"{', '.join(unparsed)}; their duplicates are under-counted",
+                    file=sys.stderr,
+                )
             c: Counter = Counter()
             for nid in tree_ids:
                 c[loc_by_id.get(nid, f"unknown-node-{nid}")] += 1
             dup = {k: v for k, v in c.items() if v >= min_dup}
             # total_scans = tree appearances (one consistent meaning:
             # how many times a scan node occurs in the executed tree).
-            out[name] = {"total_scans": len(tree_ids), "dup": dup}
+            out[name] = {
+                "total_scans": len(tree_ids),
+                "dup": dup,
+                "parse_failures": len(unparsed),
+            }
         except Exception:
             out[name] = {"err": traceback.format_exc()[-300:]}
         release_all()
@@ -100,6 +115,9 @@ def main() -> int:
     for mx, k in flagged:
         print(f"DUP {mx:4}  {k}")
     print(f"flagged {len(flagged)}/{len(out)} in {time.time() - t0:.0f}s")
+    failures = sum(v.get("parse_failures", 0) for v in out.values())
+    if failures:
+        print(f"WARN {failures} scan node(s) had no parsed Location", file=sys.stderr)
     with open("/tmp/scan_audit.json", "w") as fh:
         json.dump(out, fh)
     return 0
